@@ -25,9 +25,10 @@ relation become ONE Catalyst plan:
   per-query group membership at demux. Strictly less CLUSTER work than
   N scans + N shuffles (map output is NOT inflated — the regime where
   MRShare's GAIN is unconditionally positive); the per-batch fixed cost
-  (blocking materialize + demux round-trips) is priced by the
-  scheduler's byte-floor admission (BatchExecutor.mrshare_min_bytes —
-  measured: merging tiny parquet scans LOST ~2x), not here.
+  (collecting the merged aggregate, then the members' demux) is priced
+  by the scheduler's byte-floor admission
+  (BatchExecutor.mrshare_min_bytes — measured: merging tiny parquet
+  scans LOST ~2x), not here.
 - **differing signatures**: merged via ``GROUP BY GROUPING SETS``.
   Spark's Expand replicates every input row once per distinct grouping
   set BEFORE the shuffle — the exact map-output inflation MRShareCM
@@ -68,10 +69,12 @@ at PARSE time — by construction the demux build cannot fail late.
 
 100 TB notes: the merged plan's aggregate is still partial+final
 (map-side combine), the scan is read ONCE instead of N times (the whole
-point at 100 TB), and the demux queries run against the persisted
-merged aggregate — a relation the size of the result set, not the
-input. The merged relation is unpersisted when the batch completes
-(scheduler.py), so it cannot leak into the CacheManager's budget.
+point at 100 TB), and the demux queries run against the merged
+aggregate collected into a driver-local relation — the size of the
+result set, not the input, and capped (scheduler.MAX_MERGED_ROWS;
+over the cap the members run unmerged). Its view is dropped when the
+merge's members finish (scheduler.py), so it cannot leak into the
+CacheManager's budget.
 """
 
 from __future__ import annotations
@@ -2401,7 +2404,6 @@ class MergePlan:
     view: str
     session: Any = None  # the member jobs' shared session (None = root)
     grouping_sets: int = 1  # distinct sets merged (1 = no Expand)
-    df: Any = None  # persisted merged DataFrame, set at materialize time
 
 
 def _agg_expr(func: str, inner: Optional[str], distinct: bool, pred: Optional[str]) -> str:

@@ -28,7 +28,8 @@ DAGListener.scala:104):
               the queryable form of the reference's per-batch logging)
     response: {"status": "done", "stats": {"batches": N, "jobs_run": N,
                "jobs_failed": N, "caching_bags": N, "mrshare_plans": N,
-               "mrshare_merged_jobs": N, "cached_sources": [...],
+               "mrshare_merged_jobs": N, "mrshare_merge_failures": N,
+               "cached_sources": [...],
                "queued": N}}
 
 ``session`` names an isolated client session (temp views and SQL conf

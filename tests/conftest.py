@@ -3,11 +3,15 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, not a fixed install path: a second
+# copy of the tree must test itself
+REPO_ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, REPO_ROOT)
 
 from sparksql_server_spark import get_session  # noqa: E402
 from sparksql_server_spark.catalog import TABLES  # noqa: E402

@@ -18,6 +18,8 @@ import json
 import subprocess
 import sys
 
+from tests.conftest import REPO_ROOT
+
 # One representative per query family; events/asof/json cover the
 # TIMESTAMP(NANOS) read path that broke in round 2.
 SMOKE_QUERIES = [
@@ -60,7 +62,7 @@ SMOKE_QUERIES = [
 
 _WORKER = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[2])
 import duckdb
 from pyspark.sql import SparkSession
 
@@ -136,11 +138,11 @@ print("RESULT:" + json.dumps(failures))
 
 def test_default_config_smoke():
     proc = subprocess.run(
-        [sys.executable, "-c", _WORKER, json.dumps(SMOKE_QUERIES)],
+        [sys.executable, "-c", _WORKER, json.dumps(SMOKE_QUERIES), REPO_ROOT],
         capture_output=True,
         text=True,
         timeout=900,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
     )
     result_lines = [
         ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT:")

@@ -12,6 +12,8 @@ sets under the Expand bound).
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from sparksql_server_spark.catalog import register_tables
@@ -640,9 +642,10 @@ def test_sessions_do_not_cross_merge(spark, executor):
 
 
 def test_merged_relation_released_after_batch(spark, executor):
-    """Hygiene gate: the persisted merged aggregate must not survive
-    the batch (it would bypass the CacheManager budget — VERDICT r3
-    wrong #1 applies to the server itself too)."""
+    """Hygiene gate: the merged aggregate must not survive the batch,
+    neither as persisted blocks nor as its temp view over the
+    driver-local relation (it would bypass the CacheManager budget —
+    VERDICT r3 wrong #1 applies to the server itself too)."""
     before = persistent_rdd_ids(spark)
     jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG)]
     executor.run_batch(jobs)
@@ -655,10 +658,10 @@ def test_merged_relation_released_after_batch(spark, executor):
 
 
 def test_small_scans_not_merged_by_default(spark):
-    """Production admission: merging tiny scans LOSES (the blocking
-    materialize + demux round-trips are a fixed cost — measured ~2x
-    slower on a 19 MB parquet batch), so the default byte floor must
-    decline sf0.001 tables, leaving the jobs on the normal path."""
+    """Production admission: merging tiny scans LOSES (the merge has
+    a fixed per-batch cost — measured ~2x slower on a 19 MB parquet
+    batch), so the default byte floor must decline sf0.001 tables,
+    leaving the jobs on the normal path."""
     register_tables(spark, SF_DIR)
     ex = BatchExecutor(
         spark,
@@ -1621,7 +1624,7 @@ def test_derived_join_operand_members_merge_matches_independent(spark, executor)
 def _hook_materialize(executor, when, action):
     """Wrap _materialize_merge so ``action()`` fires deterministically
     'before' (admission happened, merged execution has not) or 'after'
-    (merged relation persisted, demux not yet run)."""
+    (merged relation collected and registered, demux not yet run)."""
     orig = executor._materialize_merge
     fired = []
 
@@ -1654,6 +1657,7 @@ def test_member_table_dropped_between_admission_and_merge(spark, executor):
         register_tables(spark, SF_DIR)  # restore for later tests
     assert fired  # the interleaving actually exercised
     assert all(not b.merges for b in bags)  # merge rolled back
+    assert executor.stats["mrshare_merge_failures"] == 1
     for job in jobs:
         assert job.status is JobStatus.ERROR, f"job {job.job_id} not failed"
         assert "TABLE_OR_VIEW_NOT_FOUND" in (job.error or "") or "lineitem" in (
@@ -1663,7 +1667,7 @@ def test_member_table_dropped_between_admission_and_merge(spark, executor):
 
 
 def test_member_table_dropped_after_merge_serves_one_snapshot(spark, executor):
-    """DROP lands after the merged relation is persisted, before any
+    """DROP lands after the merged relation is collected, before any
     demux runs: every member must be served from the ONE pre-drop
     snapshot (the valid serialization: members admitted before the
     DDL), with zero demux fallbacks — a fallback would re-run a
@@ -1717,6 +1721,133 @@ def test_member_table_swapped_between_admission_and_merge(spark, executor):
     for job, exp in zip(jobs, post_expected):
         assert job.status is JobStatus.DONE, f"job {job.job_id}: {job.error}"
         assert _rows_equal(_null_safe(job.rows), exp)
+
+
+# ---------------------------------------------------------------------------
+# the merge as a pool task: it runs beside the unmerged jobs, collects
+# the merged aggregate once into a driver-local relation, and its
+# members demux from that relation without launching Spark jobs
+
+
+UNMERGED = "SELECT o_orderpriority, count(*) AS n FROM orders GROUP BY o_orderpriority"
+
+
+def _assert_oracle_equal(duck, job):
+    from tests.oracle_compare import compare
+
+    rel = duck.sql(job.sql)
+    problems = compare(
+        job.columns, job.rows, [d[0] for d in rel.description], rel.fetchall()
+    )
+    assert not problems, f"job {job.job_id}: {problems}"
+
+
+def test_merge_runs_beside_unmerged_job(spark, executor, duck):
+    """The merged aggregate must not hold the pool shut: while it is
+    being materialized, the batch's unmerged job is already RUNNING.
+    (Stage-by-stage execution materialized every merge before any job
+    started, so the wait below would time out.)"""
+    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG)]
+    other = QueryJob(job_id=len(jobs), sql=UNMERGED)
+    orig = executor._materialize_merge
+    seen = []
+
+    def hooked(mp):
+        deadline = time.monotonic() + 60
+        while other.status is JobStatus.QUEUED and time.monotonic() < deadline:
+            time.sleep(0.01)
+        seen.append(other.status)
+        return orig(mp)
+
+    executor._materialize_merge = hooked
+    bags = executor.run_batch(jobs + [other])
+    assert seen and seen[0] is not JobStatus.QUEUED, seen
+    assert {j.job_id for b in bags for mp in b.merges for j in mp.jobs} == {0, 1, 2, 3}
+    for job in jobs + [other]:
+        assert job.status is JobStatus.DONE, f"job {job.job_id}: {job.error}"
+        _assert_oracle_equal(duck, job)
+
+
+def test_merged_members_launch_no_demux_job(spark, executor):
+    """Demux over the collected LocalRelation folds to a local scan:
+    no member's job group ever holds a Spark job."""
+    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG)]
+    bags = executor.run_batch(jobs)
+    assert any(b.merges for b in bags)
+    tracker = spark.sparkContext.statusTracker()
+    for job in jobs:
+        assert job.status is JobStatus.DONE, f"job {job.job_id}: {job.error}"
+        group = f"{executor._group_ns}-job{job.job_id}"
+        assert list(tracker.getJobIdsForGroup(group)) == [], job.job_id
+
+
+def test_merged_aggregate_over_row_cap_falls_back(spark, executor, duck, monkeypatch):
+    """A merged aggregate with more rows than MAX_MERGED_ROWS is not
+    served: every member runs its own SQL, gets oracle-equal rows, and
+    the fallback is counted."""
+    from sparksql_server_spark.server import scheduler
+
+    monkeypatch.setattr(scheduler, "MAX_MERGED_ROWS", 1)
+    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG)]
+    bags = executor.run_batch(jobs)
+    assert all(not b.merges for b in bags)
+    assert executor.stats["mrshare_merge_failures"] == 1
+    assert executor.stats["mrshare_plans"] == 0
+    assert executor.stats["mrshare_merged_jobs"] == 0
+    for job in jobs:
+        assert job.status is JobStatus.DONE, f"job {job.job_id}: {job.error}"
+        assert "rewritten_sql" not in job.props
+        _assert_oracle_equal(duck, job)
+
+
+def test_member_cancelled_during_merge(spark, executor, duck):
+    """A member cancelled while the merged aggregate runs reports
+    cancelled; the other members still get oracle-equal rows from the
+    merge, and only the cancelled member counts as failed."""
+    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG)]
+    victim = jobs[1]
+    orig = executor._materialize_merge
+    cancelled = []
+
+    def hooked(mp):
+        assert victim.status is JobStatus.RUNNING  # claimed by the merge task
+        cancelled.append(executor.cancel(victim))
+        return orig(mp)
+
+    executor._materialize_merge = hooked
+    bags = executor.run_batch(jobs)
+    assert cancelled == [True]
+    assert any(b.merges for b in bags)
+    assert victim.status is JobStatus.ERROR and "cancelled" in victim.error
+    assert victim.rows is None
+    for job in jobs:
+        if job is not victim:
+            assert job.status is JobStatus.DONE, f"job {job.job_id}: {job.error}"
+            _assert_oracle_equal(duck, job)
+    assert executor.stats["jobs_failed"] == 1
+
+
+def test_all_members_cancelled_skips_merged_scan(spark, executor):
+    """Members cancelled after planning, before the merge task claims
+    them: the merged aggregate never runs."""
+    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG)]
+    calls = []
+    orig_rewrite = executor._apply_caching_rewrite
+
+    def cancel_all_then_rewrite(bag, exclude=frozenset()):
+        for job in jobs:
+            executor.cancel(job)
+        return orig_rewrite(bag, exclude=exclude)
+
+    executor._apply_caching_rewrite = cancel_all_then_rewrite
+    executor._materialize_merge = lambda mp: calls.append(mp) or False
+    bags = executor.run_batch(jobs)
+    assert calls == []
+    assert all(not b.merges for b in bags)
+    assert executor.stats["mrshare_plans"] == 0
+    assert executor.stats["mrshare_merge_failures"] == 0
+    for job in jobs:
+        assert job.status is JobStatus.ERROR and job.error == "cancelled"
 
 
 def test_permuted_inner_join_members_merge_matches_independent(spark, executor):

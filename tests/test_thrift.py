@@ -18,6 +18,8 @@ import sys
 
 import pytest
 
+from tests.conftest import REPO_ROOT
+
 PYSPARK_HOME = None
 try:
     import pyspark
@@ -30,7 +32,7 @@ BEELINE = os.path.join(PYSPARK_HOME or "", "bin", "beeline")
 
 _WORKER = r"""
 import os, subprocess, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[3])
 from pyspark.sql import SparkSession
 from sparksql_server_spark.server.thrift import (
     register_shared_catalog, start_thriftserver, thriftserver_available,
@@ -320,7 +322,7 @@ proxy2.stop(); srv.shutdown()
 )
 def test_thrift_jdbc_round_trip(tmp_path):
     proc = subprocess.run(
-        [sys.executable, "-c", _WORKER, BEELINE, PYSPARK_HOME],
+        [sys.executable, "-c", _WORKER, BEELINE, PYSPARK_HOME, REPO_ROOT],
         capture_output=True,
         text=True,
         timeout=600,
