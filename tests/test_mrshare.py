@@ -1768,6 +1768,20 @@ def test_merge_runs_beside_unmerged_job(spark, executor, duck):
         _assert_oracle_equal(duck, job)
 
 
+def test_merge_scan_starts_before_unmerged_job(spark, executor):
+    """The merge's Spark job is submitted before the unmerged job's, so
+    the scan several clients wait on gets the free cores first."""
+    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG)]
+    other = QueryJob(job_id=len(jobs), sql=UNMERGED)
+    bags = executor.run_batch([other] + jobs)  # unmerged job arrives first
+    (mp,) = [mp for b in bags for mp in b.merges]
+    tracker = spark.sparkContext.statusTracker()
+    merge_jobs = tracker.getJobIdsForGroup(f"{executor._group_ns}-{mp.view}")
+    other_jobs = tracker.getJobIdsForGroup(f"{executor._group_ns}-job{other.job_id}")
+    assert merge_jobs and other_jobs
+    assert min(merge_jobs) < min(other_jobs)
+
+
 def test_merged_members_launch_no_demux_job(spark, executor):
     """Demux over the collected LocalRelation folds to a local scan:
     no member's job group ever holds a Spark job."""
