@@ -17,7 +17,9 @@ RewriteExecutor → FIFOStrategy):
   #3). Each MRShare merge (mrshare.py) is one task beside the unmerged
   jobs: it collects the result-sized merged aggregate once into a
   driver-local relation, and its members' demux queries over that
-  relation fold to local scans without launching a Spark job.
+  relation fold to local scans without launching a Spark job. The
+  unmerged jobs are submitted once the merges' scans have started, so
+  the scan several clients wait on gets the free cores first.
 """
 
 from __future__ import annotations
